@@ -249,7 +249,7 @@ object PlanDump {
         .localCheckpoint(true)
       val outdeg = edges.groupBy(col("src"))
         .agg(count(lit(1)).as("outdeg")).localCheckpoint(true)
-      val ranks0 = nodes.select(col("url"), lit(1000000L).as("pr"))
+      val ranks0 = nodes.select(col("url"), lit(1000000L).as("rank"))
         .localCheckpoint(true)
       dump("Integer PageRank — one iteration (web_pagerank)",
         "Check: contribution aggregation runs partial_sum BELOW the single " +
@@ -260,7 +260,8 @@ object PlanDump {
         "ranks are bucketed by src at corpus scale); NO cartesian anywhere. " +
         "The loop localCheckpoints each round, so lineage stays " +
         "constant-size over any iteration count.",
-        graft.ops.WebGraph.iterate(edges, outdeg, nodes, ranks0, 49999L))
+        graft.ops.WebGraph.iterate(edges, outdeg,
+          nodes.select(col("url"), lit(49999L).as("base")), ranks0))
     }
 
     dump("Canonical-url consolidation (web_canonical_map)",

@@ -526,36 +526,30 @@ object WebGraph {
     * Scale shape per round: one join of the undirected edge table
     * against the (vertex, label) table + one partial-aggregated count
     * + one per-vertex window argmax — all on the same vertex
-    * partitioning; labels localCheckpoint per round (the persist()
-    * plan-growth trap). O(rounds) passes, never materializing
+    * partitioning; labels cut per round by [[FixedPoint.repeat]].
+    * O(rounds) passes, never materializing
     * anything bigger than the edge list. */
   def communities(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val e = distinctEdges(edges)
-    // LAZY checkpoints (round 6): fixed round count, no partial
-    // action — the whole LPA chain materializes in one job DAG at the
-    // caller's action instead of 2 + rounds sequential blocking jobs.
     val und = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .toDF("v", "nb")
       .localCheckpoint(false)
     val nodes = und.select(col("v").as("url")).distinct()
       .localCheckpoint(false)
-    var labels = nodes.select(col("url"), col("url").as("lbl"))
-      .localCheckpoint(false)
-    val byV = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("v"))
-      .orderBy(col("c").desc, col("lbl").asc)
-    for (_ <- 1 to rounds) {
+    val byV = Window.partitionBy(col("v")).orderBy(col("c").desc, col("lbl").asc)
+    val labels = FixedPoint.repeat(
+        nodes.select(col("url"), col("url").as("lbl")).localCheckpoint(false),
+        rounds) { labels =>
       val winner = und
         .join(labels.select(col("url").as("nb"), col("lbl")), Seq("nb"))
         .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(byV))
         .filter(col("rn") === 1)
         .select(col("v").as("url"), col("lbl").as("wlbl"))
-      labels = labels
+      labels
         .join(winner, Seq("url"), "left")
         .select(col("url"), coalesce(col("wlbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(false)
     }
     labels.toDF("url", "community")
   }
@@ -607,63 +601,78 @@ object WebGraph {
     *
     * Shape per iteration: one equi-join edges⋈ranks on src (co-located
     * when both are bucketed by src), one partial-aggregated shuffle on
-    * dst, one left join back to the node set. Lineage is truncated per
-    * round via localCheckpoint — the non-negotiable pattern for
-    * iterative DataFrames (see Dedup.components). */
+    * dst, one left join back to the node set. Lineage is cut per round
+    * by [[FixedPoint.repeat]]. */
   def pageRankInt(edges: DataFrame, iterations: Int,
-                  scale: Long = 1000000000000L): DataFrame = {
+                  scale: Long = 1000000000000L): DataFrame =
+    pageRank(edges, None, iterations, scale).toDF("url", "pr")
+
+  /** Checks the rank arguments, cleans the edge table once (cut lazily:
+    * the fixed iteration count needs no convergence action, so the
+    * whole chain runs as one job DAG at the caller's action) and runs
+    * [[rankClean]]. */
+  private def pageRank(edges: DataFrame, seeds: Option[DataFrame],
+                       iterations: Int, scale: Long): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(scale > 0 && scale <= Long.MaxValue / 85,
       "scale must keep 85*rank within Long")
-    // LAZY checkpoints: the iteration count is fixed (no per-round
-    // convergence action), so every round still materializes exactly
-    // once — inside ONE job DAG at the final action instead of
-    // `iterations` sequential driver-blocking jobs, and the edge
-    // table's exchange is reused across rounds within that job
-    pageRankIntClean(distinctEdges(edges).localCheckpoint(false),
+    rankClean(distinctEdges(edges).localCheckpoint(false), seeds,
       iterations, scale)
   }
 
-  /** [[pageRankInt]] over an ALREADY-cleaned (self-loop-free,
-    * distinct, checkpointed) edge table — lets composites like
-    * [[spamMass]] run both rank fixed points off ONE materialization
-    * of an expensive edge subtree (round 6; the anchor-extraction
-    * parse ran once per pipeline before). */
-  private[graft] def pageRankIntClean(e: DataFrame, iterations: Int,
-                  scale: Long = 1000000000000L): DataFrame = {
+  /** The one integer rank kernel behind [[pageRankInt]],
+    * [[pageRankSeeded]] and [[spamMass]], over an ALREADY-cleaned
+    * (self-loop-free, distinct, cut) edge table, so a composite can run
+    * several rank chains off one materialization of an expensive edge
+    * subtree. Teleport mass lands on `seeds` ∩ node universe, or on
+    * every node when `seeds` is None; each node's teleport `base` and
+    * initial rank ride in one per-node table, so the global and the
+    * seeded rank are the same recursion. Returns (url, rank). */
+  private[graft] def rankClean(e: DataFrame, seeds: Option[DataFrame],
+                               iterations: Int, scale: Long): DataFrame = {
     val nodes = e.select(col("src").as("url"))
       .union(e.select(col("dst").as("url"))).distinct()
       .localCheckpoint(false)
-    val n = nodes.count()
-    val init = scale / n
-    val base = 15L * init / 100L
+    val teleport = seeds match {
+      case None =>
+        val init = scale / nodes.count()
+        nodes.select(col("url"), lit(15L * init / 100L).as("base"),
+          lit(init).as("init"))
+      case Some(s) =>
+        val sd = s.select(col("url")).distinct()
+          .join(nodes, Seq("url")).localCheckpoint(false)
+        val nS = sd.count()
+        require(nS > 0, "no seed url is present in the edge set's node universe")
+        val init = scale / nS
+        nodes
+          .join(sd.select(col("url"), lit(true).as("is_seed")), Seq("url"), "left")
+          .select(col("url"),
+            when(col("is_seed"), lit(15L * init / 100L)).otherwise(lit(0L)).as("base"),
+            when(col("is_seed"), lit(init)).otherwise(lit(0L)).as("init"))
+          .localCheckpoint(false)
+    }
     val outdeg = e.groupBy(col("src"))
       .agg(count(lit(1)).as("outdeg")).localCheckpoint(false)
-    var ranks = nodes.select(col("url"), lit(init).as("pr"))
-    var i = 0
-    while (i < iterations) {
-      ranks = iterate(e, outdeg, nodes, ranks, base).localCheckpoint(false)
-      i += 1
-    }
-    ranks
+    FixedPoint.repeat(teleport.select(col("url"), col("init").as("rank")),
+      iterations)(iterate(e, outdeg, teleport, _))
   }
 
-  /** One PageRank round (pre-checkpoint plan — exposed so PlanDump can
-    * audit the per-iteration shape): edges⋈ranks⋈outdeg on src, a
-    * partial-aggregated shuffle on dst, left join back to the node
-    * set. */
+  /** One rank round (pre-cut plan — exposed so PlanDump can audit the
+    * per-iteration shape): edges⋈ranks⋈outdeg on src, a
+    * partial-aggregated shuffle on dst, left join back to the per-node
+    * teleport table (url, base). */
   private[graft] def iterate(e: DataFrame, outdeg: DataFrame,
-                             nodes: DataFrame, ranks: DataFrame,
-                             base: Long): DataFrame = {
+                             teleport: DataFrame,
+                             ranks: DataFrame): DataFrame = {
     val contribs = e
       .join(ranks.withColumnRenamed("url", "src"), Seq("src"))
       .join(outdeg, Seq("src"))
-      .select(col("dst").as("url"), expr("pr div outdeg").as("c"))
+      .select(col("dst").as("url"), expr("rank div outdeg").as("c"))
       .groupBy(col("url")).agg(sum(col("c")).as("contrib"))
-    nodes.join(contribs, Seq("url"), "left")
+    teleport.join(contribs, Seq("url"), "left")
       .select(col("url"),
-        (lit(base) +
-          expr("(85 * coalesce(contrib, 0L)) div 100")).as("pr"))
+        (col("base") +
+          expr("(85 * coalesce(contrib, 0L)) div 100")).as("rank"))
   }
 
   /** DuckDB replica of [[pageRankInt]] as flat CTE stages (the
@@ -724,56 +733,8 @@ object WebGraph {
     * any parallelism. Per-iteration shape matches [[pageRankInt]] plus
     * one broadcast-sized left join against the seed flag. */
   def pageRankSeeded(edges: DataFrame, seeds: DataFrame, iterations: Int,
-                     scale: Long = 1000000000000L): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(scale > 0 && scale <= Long.MaxValue / 85,
-      "scale must keep 85*rank within Long")
-    // LAZY checkpoints — the pageRankInt argument verbatim
-    pageRankSeededClean(distinctEdges(edges).localCheckpoint(false),
-      seeds, iterations, scale)
-  }
-
-  /** [[pageRankSeeded]] over an already-cleaned edge table — see
-    * [[pageRankIntClean]]. */
-  private[graft] def pageRankSeededClean(e: DataFrame, seeds: DataFrame,
-                     iterations: Int,
-                     scale: Long = 1000000000000L): DataFrame = {
-    val nodes = e.select(col("src").as("url"))
-      .union(e.select(col("dst").as("url"))).distinct()
-      .localCheckpoint(false)
-    val sd = seeds.select(col("url")).distinct()
-      .join(nodes, Seq("url")).localCheckpoint(false)
-    val nS = sd.count()
-    require(nS > 0, "no seed url is present in the edge set's node universe")
-    val init = scale / nS
-    val base = 15L * init / 100L
-    // seed flag joined once; the per-iteration base is a column, not a
-    // constant — otherwise identical to the global kernel's iterate()
-    val flagged = nodes
-      .join(sd.select(col("url"), lit(true).as("is_seed")), Seq("url"), "left")
-      .select(col("url"),
-        when(col("is_seed"), lit(base)).otherwise(lit(0L)).as("base"),
-        when(col("is_seed"), lit(init)).otherwise(lit(0L)).as("init"))
-      .localCheckpoint(false)
-    val outdeg = e.groupBy(col("src"))
-      .agg(count(lit(1)).as("outdeg")).localCheckpoint(false)
-    var ranks = flagged.select(col("url"), col("init").as("trust"))
-    var i = 0
-    while (i < iterations) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("url", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("url"), expr("trust div outdeg").as("c"))
-        .groupBy(col("url")).agg(sum(col("c")).as("contrib"))
-      ranks = flagged.join(contribs, Seq("url"), "left")
-        .select(col("url"),
-          (col("base") +
-            expr("(85 * coalesce(contrib, 0L)) div 100")).as("trust"))
-        .localCheckpoint(false)
-      i += 1
-    }
-    ranks
-  }
+                     scale: Long = 1000000000000L): DataFrame =
+    pageRank(edges, Some(seeds), iterations, scale).toDF("url", "trust")
 
   /** Spam-mass census (Gyöngyi/Garcia-Molina/Pedersen): the share of
     * a page's PageRank that does NOT come with trust — pages whose
@@ -797,10 +758,11 @@ object WebGraph {
     // cleaned set handed to both kernels is exactly what each computed
     // for itself before — bit-identical ranks.
     val e = distinctEdges(edges).localCheckpoint(false)
-    val pr = pageRankIntClean(e, iterations)
-      .select(col("url"), col("pr"), expr(s"pr div ${div}L").as("p"))
-    val tr = pageRankSeededClean(e, seeds, iterations)
-      .select(col("url"), col("trust"), expr(s"trust div ${div}L").as("t"))
+    val scale = 1000000000000L
+    val pr = rankClean(e, None, iterations, scale)
+      .select(col("url"), col("rank").as("pr"), expr(s"rank div ${div}L").as("p"))
+    val tr = rankClean(e, Some(seeds), iterations, scale)
+      .select(col("url"), col("rank").as("trust"), expr(s"rank div ${div}L").as("t"))
     val joined = pr.join(tr, Seq("url")).localCheckpoint(false)
     val tot = joined.agg(sum(col("p")), sum(col("t"))).collect()(0)
     val (tp, tt) = (tot.getLong(0), tot.getLong(1))
@@ -1142,20 +1104,24 @@ object WebGraph {
     * Implementation: Pregel-style frontier BFS. Each round joins the
     * edge table against the CURRENT FRONTIER ONLY (not the full
     * visited set), then anti-joins against everything already visited
-    * — so round cost is proportional to the newly discovered rim, and
-    * the loop exits as soon as a frontier comes back empty. Every
-    * frontier is localCheckpoint-ed (plan truncation — an iterative
-    * loop otherwise doubles its logical plan per round); the visited
-    * set is a lazy union of those checkpointed leaves, never
-    * re-materialized. Rounds are bounded by graph diameter (the web's
-    * is ~tens); at 10^12 edges you'd bucket the edge table by src so
-    * each round's join is co-partitioned and shuffle-free on the big
-    * side. Oracle: [[crawlDepthOracleSql]], an independent
-    * recursive-CTE min-over-all-walks formulation. */
+    * — so round cost is proportional to the newly discovered rim.
+    * There is no per-level barrier: all `maxDepth` levels chain lazily
+    * and the caller's one action materializes the whole BFS as one job
+    * DAG; once the frontier is exhausted the remaining levels are empty
+    * frames (an empty-frontier join is free — AQE propagates the empty
+    * relation and skips the stages). Every frontier is cut with a lazy
+    * localCheckpoint (plan truncation — an iterative loop otherwise
+    * doubles its logical plan per round); the visited set is a lazy
+    * union of those cut leaves, never re-materialized. The loop keeps
+    * its own list of levels rather than one [[FixedPoint]] state,
+    * because that state would be copied into every level's cut. Levels
+    * are bounded by graph diameter (the web's is ~tens); at 10^12 edges
+    * you'd bucket the edge table by src so each round's join is
+    * co-partitioned and shuffle-free on the big side. Oracle:
+    * [[crawlDepthOracleSql]], an independent recursive-CTE
+    * min-over-all-walks formulation. */
   def crawlDepth(edges: DataFrame, seeds: DataFrame,
                  maxDepth: Int = 10): DataFrame = {
-    // LAZY checkpoints + count-as-materializer: one job per BFS level
-    // instead of an eager checkpoint job plus an isEmpty job.
     // (A persist() pre-partitioned on src was tried to save the
     // per-round e-side exchange — the InMemoryRelation keeps its
     // outputPartitioning where a checkpoint's LogicalRDD loses it —
@@ -1165,27 +1131,13 @@ object WebGraph {
       .localCheckpoint(false)
     val seed0 = seeds.select(col("url")).distinct()
       .select(col("url"), lit(0).as("depth")).localCheckpoint(false)
-    var levels = List(seed0) // one checkpointed leaf per BFS level
-    var frontier = seed0
-    var d = 0
-    // NO per-level count barrier (round 6): the early-exit count cost
-    // one driver-blocking job per BFS level; an exhausted frontier
-    // instead just yields empty frames for the remaining levels (an
-    // empty-frontier join is free — AQE propagates the empty relation
-    // and skips the stages), so all maxDepth levels chain lazily and
-    // the caller's single action materializes the whole BFS as one
-    // job DAG. Identical result: union with empty tail levels.
-    while (d < maxDepth) {
-      d += 1
-      val visited = levels.map(_.select("url")).reduce(_ union _)
-      val next = e
-        .join(frontier.select(col("url").as("src")), Seq("src"))
+    // one cut leaf per BFS level, newest first
+    val levels = (1 to maxDepth).foldLeft(List(seed0)) { (levels, d) =>
+      e.join(levels.head.select(col("url").as("src")), Seq("src"))
         .select(col("dst").as("url")).distinct()
-        .join(visited, Seq("url"), "left_anti")
+        .join(levels.map(_.select("url")).reduce(_ union _), Seq("url"), "left_anti")
         .select(col("url"), lit(d).as("depth"))
-        .localCheckpoint(false)
-      levels ::= next
-      frontier = next
+        .localCheckpoint(false) :: levels
     }
     levels.reduce(_ union _)
   }
@@ -1243,15 +1195,14 @@ object WebGraph {
     *
     * Shape per iteration (same as [[pageRankInt]]): two equi-joins
     * edges⋈scores and two partial-aggregated shuffles, plus a 1-row
-    * broadcast for each L1 sum; lineage truncated per round via
-    * localCheckpoint. */
+    * broadcast for each L1 sum; lineage cut per half-round by
+    * [[FixedPoint.repeat]]. */
   def hitsInt(edges: DataFrame, iterations: Int,
               scale: Long = 100000000L, maxDegree: Long = 900L): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(scale > 0 && maxDegree > 0 &&
       scale <= Long.MaxValue / scale / maxDegree,
       "scale must keep maxDegree*scale^2 within Long")
-    // LAZY checkpoints — the pageRankInt argument verbatim
     val e = distinctEdges(edges).localCheckpoint(false)
     val nodes = e.select(col("src").as("url"))
       .union(e.select(col("dst").as("url"))).distinct()
@@ -1269,46 +1220,28 @@ object WebGraph {
     // 0), so every emitted integer is bit-identical to the dense
     // formulation — same oracle, fewer exchanges per round. The
     // per-round h⋈a pairing join is likewise deferred to the end.
-    def renormSparse(raw: DataFrame, out: String): DataFrame = {
+    // A half-step spreads one side's scores along the edges (`from` →
+    // `to`) and renormalizes them into the other side's column.
+    def spread(s: DataFrame, from: String, to: String, out: String): DataFrame = {
+      val raw = e.join(s.toDF(from, "s"), Seq(from))
+        .groupBy(col(to).as("url")).agg(sum(col("s")).as("raw"))
       val tot = raw.agg(sum(col("raw")).as("tot"))
       raw.crossJoin(broadcast(tot))
         .select(col("url"),
           when(col("tot").isNull || col("tot") === 0L, lit(0L))
             .otherwise(expr(s"(raw * ${scale}L) div tot")).as(out))
     }
-    var hub = nodes.select(col("url"), lit(init).as("hub"))
-    var auth = nodes.select(col("url"), lit(init).as("auth"))
-    var i = 0
-    while (i < iterations) {
-      val hRaw = e.join(
-        auth.select(col("url").as("dst"), col("auth")), Seq("dst"))
-        .groupBy(col("src").as("url")).agg(sum(col("auth")).as("raw"))
-      hub = renormSparse(hRaw, "hub").localCheckpoint(false)
-      val aRaw = e.join(
-        hub.select(col("url").as("src"), col("hub")), Seq("src"))
-        .groupBy(col("dst").as("url")).agg(sum(col("hub")).as("raw"))
-      auth = renormSparse(aRaw, "auth").localCheckpoint(false)
-      i += 1
-    }
+    def toHub(auth: DataFrame): DataFrame = spread(auth, "dst", "src", "hub")
+    def toAuth(hub: DataFrame): DataFrame = spread(hub, "src", "dst", "auth")
+    val aPrev = FixedPoint.repeat(nodes.select(col("url"), lit(init).as("auth")),
+      iterations - 1)(a => toAuth(FixedPoint.cut(toHub(a))))
+    val hub = FixedPoint.cut(toHub(aPrev))
+    val auth = FixedPoint.cut(toAuth(hub))
     nodes
       .join(hub, Seq("url"), "left")
       .join(auth, Seq("url"), "left")
       .select(col("url"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
-  }
-
-  /** L1-renormalize a sparse (url, raw) score table onto the full node
-    * set: s = raw * scale div Σ raw (0 when the table is empty). The
-    * Σ is a 1-row aggregate cross-joined in — a broadcast, never a
-    * shuffle of the node table. */
-  private def renormL1(nodes: DataFrame, raw: DataFrame,
-                       scale: Long): DataFrame = {
-    val tot = raw.agg(sum(col("raw")).as("tot"))
-    nodes.join(raw, Seq("url"), "left").crossJoin(broadcast(tot))
-      .select(col("url"),
-        when(col("tot").isNull || col("tot") === 0L, lit(0L))
-          .otherwise(expr(s"(coalesce(raw, 0L) * ${scale}L) div tot"))
-          .as("s"))
   }
 
   /** DuckDB replica of [[hitsInt]] as flat unrolled CTE stages —
@@ -1433,33 +1366,30 @@ object WebGraph {
     *    independent) capped state. maxRounds=20 covers chains of 10^6
     *    hops; anything longer is operationally a loop.
     *
-    * Scale shape: one self-equi-join (dst = src) + localCheckpoint per
-    * round — O(log L) shuffles total, lineage constant-size (the
-    * components/pageRank discipline); convergence is one cheap
-    * any-row-advanced probe per round. */
+    * `maxRounds` counts driver barriers, one per doubling round.
+    *
+    * Scale shape: one self-equi-join (dst = src) per round, cut by
+    * [[FixedPoint.converge]] — O(log L) shuffles total, lineage
+    * constant-size; convergence is one hop-total aggregate per round
+    * (so a table whose first round advances nothing takes a second
+    * round to see the total settle). */
   def resolveRedirects(redirects: DataFrame,
                        maxRounds: Int = 20): DataFrame = {
-    var m = redirects.groupBy(col("src"))
+    val m0 = redirects.groupBy(col("src"))
       .agg(min(col("dst")).as("dst"))
       .select(col("src"), col("dst"), lit(1L).as("hops"))
       .localCheckpoint(false)
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
+    // a round that advances a row adds ≥ 1 to its hops, so an unchanged
+    // hop total is a round that advanced nothing: the fixpoint (an
+    // empty table totals 0, not NULL)
+    val (m, _, _) = FixedPoint.converge(m0, 1, maxRounds) { m =>
       val b = m.select(col("src").as("b_src"), col("dst").as("b_dst"),
         col("hops").as("b_hops"))
-      val m2 = m.join(b, m("dst") === b("b_src"), "left")
+      m.join(b, m("dst") === b("b_src"), "left")
         .select(m("src"),
           coalesce(col("b_dst"), m("dst")).as("dst"),
-          (m("hops") + coalesce(col("b_hops"), lit(0L))).as("hops"),
-          col("b_src").isNotNull.as("advanced"))
-        .localCheckpoint(false)
-      done = m2.filter(col("advanced")).limit(1).count() == 0L
-      // projection over the (already-persisted) round checkpoint —
-      // no second materialization needed, plan depth stays constant
-      m = m2.select(col("src"), col("dst"), col("hops"))
-      round += 1
-    }
+          (m("hops") + coalesce(col("b_hops"), lit(0L))).as("hops"))
+    }(_.agg(coalesce(sum(col("hops")), lit(0L))).first().getLong(0))
     val srcs = m.select(col("src").as("cyc_key")).distinct()
     m.join(srcs, m("dst") === srcs("cyc_key"), "left")
       .select(col("src"), col("dst").as("final_dst"), col("hops"),
@@ -2002,14 +1932,13 @@ object WebGraph {
     *
     * Registers are sparse rows (v, reg, mx) — absent = zero; the merge
     * `ball_r(v) = ball_{r-1}(v) ∪ ⋃_{v→w} ball_{r-1}(w)` is a union +
-    * groupBy max, localCheckpoint per round ([[weaklyConnected]]
-    * lineage discipline). The per-node estimate reuses
-    * [[Cardinality]]'s bit-exact discipline verbatim: dyadic register
-    * weights (one shiftleft + one IEEE division), register-ordered
-    * fold, literal alpha — so the DuckDB oracle reproduces every
-    * estimate bit for bit. The EXACT ball size rides along as the
-    * audit arm (a staged pair closure — affordable at oracle scale
-    * only, which is precisely the point of the sketch).
+    * groupBy max, cut per round by [[FixedPoint.repeat]]. The per-node
+    * estimate reuses [[Cardinality]]'s bit-exact discipline verbatim:
+    * dyadic register weights (one shiftleft + one IEEE division),
+    * register-ordered fold, literal alpha — so the DuckDB oracle
+    * reproduces every estimate bit for bit. The EXACT ball size rides
+    * along as the audit arm (a staged pair closure — affordable at
+    * oracle scale only, which is precisely the point of the sketch).
     *
     * Output: (v, m, n_zero_registers, estimate, exact_ball). */
   def hyperBall(edges: DataFrame, p: Int = 4, rounds: Int = 3): DataFrame = {
@@ -2018,29 +1947,23 @@ object WebGraph {
     val m = 1 << p
     val spark = edges.sparkSession
     import spark.implicits._
-    // LAZY checkpoints (fixed round count, no partial actions): all
-    // rounds + the fold materialize in one job DAG, each level cached
-    // exactly once
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(false) // joined every round by both arms
     val nodes = e.select(col("src").as("v"))
       .unionAll(e.select(col("dst").as("v"))).distinct()
-    var state = nodes.as[String].mapPartitions(_.map { v =>
+    val state0 = nodes.as[String].mapPartitions(_.map { v =>
       val (reg, rank) = Cardinality.regRank(v, p); (v, reg, rank)
     }).toDF("v", "reg", "mx").localCheckpoint(false)
-    var pairs = nodes.select(col("v"), col("v").as("u")).localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      state = state.unionAll(
-          e.join(state.withColumnRenamed("v", "dst"), Seq("dst"))
-            .select(col("src").as("v"), col("reg"), col("mx")))
-        .groupBy(col("v"), col("reg")).agg(max(col("mx")).as("mx"))
-        .localCheckpoint(false)
-      pairs = pairs.unionAll(
-          e.join(pairs.withColumnRenamed("v", "dst"), Seq("dst"))
-            .select(col("src").as("v"), col("u")))
-        .distinct().localCheckpoint(false)
-    }
+    val pairs0 = nodes.select(col("v"), col("v").as("u")).localCheckpoint(false)
+    // one round of ball_r(v) = ball_{r-1}(v) ∪ ⋃_{v→w} ball_{r-1}(w),
+    // before the per-arm merge: (v, reg, mx) registers or (v, u) pairs
+    def spread(x: DataFrame): DataFrame = x.unionAll(
+      e.join(x.withColumnRenamed("v", "dst"), Seq("dst"))
+        .select(col("src").as("v") +: x.columns.tail.toSeq.map(col): _*))
+    val state = FixedPoint.repeat(state0, rounds)(
+      spread(_).groupBy(col("v"), col("reg")).agg(max(col("mx")).as("mx")))
+    val pairs = FixedPoint.repeat(pairs0, rounds)(spread(_).distinct())
     val folded = state
       .select(col("v"), col("reg"), expr(
         "CAST(1.0 AS DOUBLE) / CAST(shiftleft(CAST(1 AS BIGINT), mx) AS DOUBLE)")
@@ -2128,13 +2051,16 @@ object WebGraph {
     * Algorithm: synchronous peeling. Each round recomputes degrees
     * (one partial-agg shuffle) and drops every node below k via two
     * LEFT SEMI joins — no row ever widens, state is only the live
-    * edge list. Peeling is removal-only, so an unchanged surviving-
-    * node count IS the fixpoint (nothing was removed ⇒ nothing ever
-    * will be). Rounds are bounded by the peeling depth (single digits
-    * on web graphs, ≤7 on this corpus at both SFs); each round ends in
-    * localCheckpoint(false) — same lineage-truncation discipline as
-    * [[weaklyConnected]], without which the plan doubles per round.
-    * Driver traffic is one count per round.
+    * edge list. Peeling is removal-only, so an unchanged count of
+    * nodes that survive the next peel IS the fixpoint (nothing was
+    * removed ⇒ nothing ever will be). Rounds are bounded by the
+    * peeling depth (single digits on web graphs, ≤7 on this corpus at
+    * both SFs). Peels run on [[FixedPoint.converge]], three per driver
+    * barrier, and driver traffic is one count per barrier.
+    *
+    * `maxIter` counts driver barriers, i.e. batches of three peels,
+    * including the batch that sees the count settle; when it runs out
+    * first, the result is the core as peeled so far.
     *
     * The DuckDB oracle replays the SAME peeling as a staged CTE chain
     * with a fixed stage count (strictly more stages than the measured
@@ -2142,48 +2068,22 @@ object WebGraph {
     * [[pageRankOracleSql]] stages its iterations. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1 && maxIter >= 1)
-    // LAZY checkpoints: each round's keep.count() is a full-scan
-    // action over the new live set, materializing it in the same job
-    var live = edges.select(least(col("src"), col("dst")).as("a"),
+    def nodeDegrees(l: DataFrame): DataFrame =
+      l.select(col("a").as("v")).unionAll(l.select(col("b").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+    val live0 = edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") < col("b")).distinct()
       .localCheckpoint(false)
-    var prevNodes = -1L
-    var round = 0
-    var done = false
-    // Batched peels (round 6, the SCC-trim BSP lever): each driver
-    // barrier (count) costs fixed job latency at any data size, so
-    // `hops` peels run lazily between barriers — surplus peels past
-    // the fixpoint are identity, and the node count is monotone
-    // non-increasing, so batch-boundary count equality == fixpoint.
-    // Each peel is lazily checkpointed (it references `live` three
-    // times; an unbroken chain grows the logical plan exponentially).
-    val hops = 3
-    while (!done && round < maxIter) {
-      var l2 = live
-      var h = 0
-      while (h < hops) {
-        val keep = l2.select(col("a").as("v"))
-          .unionAll(l2.select(col("b").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k).select(col("v"))
-        l2 = l2
-          .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint(false)
-        h += 1
-      }
-      // one barrier per batch: the surviving node count of the batch
-      val n = l2.select(col("a").as("v"))
-        .unionAll(l2.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .count()
-      if (n == prevNodes) done = true // removal-only ⇒ stable count = fixpoint
-      else { prevNodes = n; live = l2; round += 1 }
-    }
-    live.select(col("a").as("v")).unionAll(live.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
+    // 3 peels per barrier (the SCC-trim BSP lever): a barrier costs
+    // fixed job latency at any data size, and surplus peels past the
+    // fixpoint are identity
+    val (live, _, _) = FixedPoint.converge(live0, 3, maxIter) { l =>
+      val keep = nodeDegrees(l).where(col("deg") >= k).select(col("v"))
+      l.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
+    }(nodeDegrees(_).where(col("deg") >= k).count())
+    nodeDegrees(live).withColumnRenamed("deg", "core_deg")
   }
 
   /** DuckDB oracle for kCore(extractAnchors(syntheticWeb(…))) — the
@@ -2315,20 +2215,19 @@ object WebGraph {
     * nodes incident ONLY to self-loops leave the vertex universe, as
     * in the oracle.
     *
-    * Scale shape: each round is degree-bounded joins + distincts with
-    * localCheckpoint lineage truncation (the kCore/weaklyConnected
-    * pattern). Round count is bounded by periphery DAG depth + giant-
-    * SCC diameter per outer iteration — web graphs are shallow; the
-    * maxIter guard turns pathological inputs into an explicit error
-    * rather than an unbounded job. */
+    * Scale shape: each round is degree-bounded joins + distincts;
+    * trim, color and extract each run on [[FixedPoint]], `hops` rounds
+    * per driver barrier. Round count is bounded by periphery DAG depth
+    * + giant-SCC diameter per outer iteration — web graphs are shallow.
+    * `maxIter` counts driver barriers across all three phases and all
+    * outer iterations; a graph the distributed path has not labeled
+    * when it runs out fails with "did not converge" rather than
+    * becoming an unbounded job or a partial labeling. */
   def stronglyConnected(edges: DataFrame, maxIter: Int = 200,
                         hops: Int = 3,
                         driverEdgeGate: Long = 200000L): DataFrame = {
     import edges.sparkSession.implicits._
     val spark = edges.sparkSession
-    // checkpoint+count pairs here and below are LAZY checkpoint +
-    // count(): a full-scan action materializes the checkpoint in the
-    // same job, halving the driver-blocking jobs per barrier
     var live = edges.select(col("src_id").as("s"), col("dst_id").as("t"))
       .where(col("s") =!= col("t")).distinct().localCheckpoint(false)
     var nodes = live.select(col("s").as("v"))
@@ -2338,11 +2237,6 @@ object WebGraph {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("scc_id", org.apache.spark.sql.types.LongType))))
-    var barriers = 0
-    def spend(): Unit = {
-      barriers += 1
-      require(barriers <= maxIter, s"SCC did not converge within $maxIter supersteps")
-    }
     // Upfront size gate (the components() idiom, round 6): when the
     // WHOLE graph already fits the driver budget, solve it there
     // immediately — Kosaraju on ≤200k edges beats ~60 sequential
@@ -2361,47 +2255,41 @@ object WebGraph {
         .select(col("v"), col("scc_id"), col("scc_size"))
     }
     var remaining = nodes.count()
+    // every phase spends driver barriers from the one maxIter budget
+    var budget = maxIter
+    def spend[M](run: (DataFrame, Option[M], Option[Int])): DataFrame = {
+      require(run._3.isDefined, s"SCC did not converge within $maxIter supersteps")
+      budget = run._3.get
+      run._1
+    }
+    // live restricted to the node set n
+    def restrict(n: DataFrame): DataFrame = live
+      .join(n.select(col("v").as("s")), Seq("s"), "left_semi")
+      .join(n.select(col("v").as("t")), Seq("t"), "left_semi")
     while (remaining > 0) {
-      // ---- 1. trim to fixpoint: `hops` peels per superstep. Batching
+      // ---- 1. trim to fixpoint: `hops` peels per barrier. Batching
       // hops between barriers is the BSP lever — each driver round-trip
       // (checkpoint + count) costs ~0.5 s of fixed job overhead at any
       // data size, so 3 peels per barrier cut the sf0.1 wall from 22 s
       // to ~10 s with identical results (the fixpoint is confluent).
-      var trimming = true
-      while (trimming && remaining > 0) {
-        spend()
-        // LAZY checkpoint per hop: each hop references its input 2-3
-        // times, so an unbroken chain grows the logical plan ~3^hops
-        // and Catalyst goes exponential (measured: ONE hops=5 batch on
-        // 15 edges = 517 s of pure planning). localCheckpoint(false)
-        // truncates the LOGICAL plan immediately (each hop plans over
-        // a LogicalRDD leaf — linear) but launches no job; the whole
-        // batch still materializes in the single eager barrier below.
-        var n2 = nodes
-        var l2 = live
-        var h = 0
-        while (h < hops) {
-          val keep = l2.select(col("s").as("v")).distinct()
-            .join(l2.select(col("t").as("v")).distinct(), Seq("v"), "left_semi")
-          n2 = n2.join(keep, Seq("v"), "left_semi").localCheckpoint(false)
-          l2 = l2.join(n2.select(col("v").as("s")), Seq("s"), "left_semi")
-            .join(n2.select(col("v").as("t")), Seq("t"), "left_semi")
-            .localCheckpoint(false)
-          h += 1
-        }
-        n2 = n2.localCheckpoint(false)
-        val nLeft = n2.count()
-        if (nLeft == remaining) trimming = false
-        else {
-          val trimmed = nodes.join(n2, Seq("v"), "left_anti")
-          assigned = assigned
-            .unionAll(trimmed.select(col("v"), col("v").as("scc_id")))
-            .localCheckpoint(false)
-          nodes = n2
-          live = l2.localCheckpoint(false)
-          remaining = nLeft
-        }
-      }
+      // A peel keeps the nodes with an in- and an out-edge among the
+      // nodes still kept; peeled node sets only shrink, so live
+      // restricted to the last one is the peeled edge set. An empty
+      // node set ends the trim at its barrier.
+      val trim = FixedPoint.converge(nodes, hops, budget, Some(remaining),
+          (_: Long) == 0L) { n =>
+        val l = restrict(n)
+        l.select(col("s").as("v")).distinct()
+          .join(l.select(col("t").as("v")).distinct(), Seq("v"), "left_semi")
+      }(_.count())
+      val n2 = spend(trim)
+      val nLeft = trim._2.get // Some: the trim starts from Some(remaining)
+      if (nLeft < remaining)
+        assigned = FixedPoint.cut(assigned.unionAll(
+          nodes.join(n2, Seq("v"), "left_anti").select(col("v"), col("v").as("scc_id"))))
+      nodes = n2
+      remaining = nLeft
+      if (remaining > 0) live = FixedPoint.cut(restrict(nodes))
       if (remaining > 0 && live.count() <= driverEdgeGate) {
         // ---- driver finish: the residual graph (post-trim) is small —
         // collect and run Kosaraju on the driver, the same size-gated
@@ -2418,57 +2306,30 @@ object WebGraph {
         remaining = 0L
       }
       if (remaining > 0) {
-        // ---- 2. forward min-label coloring to fixpoint (batched hops)
-        def colorStep(cIn: DataFrame): DataFrame = {
+        // ---- 2. forward min-label coloring to fixpoint: labels only
+        // ever decrease, so an unchanged exact label total means
+        // nothing moved across the batch
+        val c = spend(FixedPoint.converge(
+            FixedPoint.cut(nodes.select(col("v"), col("v").as("c"))), hops, budget) { cIn =>
           val inMin = live
             .join(cIn.select(col("v").as("s"), col("c").as("cs")), Seq("s"))
             .groupBy(col("t")).agg(min(col("cs")).as("m"))
             .select(col("t").as("v"), col("m"))
           cIn.join(inMin, Seq("v"), "left")
             .select(col("v"), least(col("c"), coalesce(col("m"), col("c"))).as("c"))
-        }
-        var c = nodes.select(col("v"), col("v").as("c")).localCheckpoint(false)
-        var coloring = true
-        while (coloring) {
-          spend()
-          var c2 = c
-          var h = 0
-          // lazy per hop (plan-growth guard, see trim loop)
-          while (h < hops) { c2 = colorStep(c2).localCheckpoint(false); h += 1 }
-          c2 = c2.localCheckpoint(false)
-          // fixpoint iff NOTHING moved across the whole batch (labels
-          // only ever decrease, so batch-end equality == fixpoint)
-          val nChanged = c2.select(col("v"), col("c").as("c2"))
-            .join(c, Seq("v")).where(col("c2") =!= col("c")).count()
-          c = c2
-          if (nChanged == 0L) coloring = false
-        }
+        }(_.agg(sum(col("c").cast("decimal(38,0)"))).first().getDecimal(0)))
         // ---- 3. extract each pivot's SCC by a class-local backward
-        // wave (batched hops; mark sets only grow, so batch-end count
-        // equality == fixpoint)
-        val cls = c
-        def growStep(m: DataFrame): DataFrame = {
+        // wave (mark sets only grow, so an unchanged count == fixpoint)
+        val mark0 = FixedPoint.cut(c.where(col("v") === col("c")))
+        val mark = spend(FixedPoint.converge(mark0, hops, budget,
+            Some(mark0.count())) { m =>
           val next = live
             .join(m.select(col("v").as("t"), col("c").as("mc")), Seq("t"))
-            .join(cls.select(col("v").as("s"), col("c").as("sc")), Seq("s"))
+            .join(c.select(col("v").as("s"), col("c").as("sc")), Seq("s"))
             .where(col("sc") === col("mc"))
             .select(col("s").as("v"), col("sc").as("c"))
           m.unionAll(next).groupBy(col("v")).agg(min(col("c")).as("c"))
-        }
-        var mark = c.where(col("v") === col("c")).localCheckpoint(false)
-        var markCount = mark.count()
-        var growing = true
-        while (growing) {
-          spend()
-          var m2 = mark
-          var h = 0
-          // lazy per hop (plan-growth guard, see trim loop)
-          while (h < hops) { m2 = growStep(m2).localCheckpoint(false); h += 1 }
-          m2 = m2.localCheckpoint(false)
-          val cnt = m2.count()
-          if (cnt == markCount) growing = false
-          else { mark = m2; markCount = cnt }
-        }
+        }(_.count()))
         assigned = assigned
           .unionAll(mark.select(col("v"), col("c").as("scc_id")))
           .localCheckpoint(false)

@@ -56,7 +56,10 @@ object ExtractJob {
       }
     if (!cfg.salt) toDocs(pruned)
     else {
-      val heavyPred = length(col("html")) > cfg.heavyThresholdBytes
+      // NULL html has a NULL length: without the coalesce neither tier's
+      // filter keeps the row, and it would vanish instead of coming out
+      // as an error row
+      val heavyPred = coalesce(length(col("html")) > cfg.heavyThresholdBytes, lit(false))
       val normal = toDocs(pruned.filter(!heavyPred))
       val nPart = math.max(spark.sparkContext.defaultParallelism * 2, 16)
       val heavy = toDocs(

@@ -79,4 +79,21 @@ class KCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(expect.nonEmpty, "fixture should have a non-empty 3-core")
     assert(run(edges(es: _*), 3) === expect)
   }
+
+  test("a tail longer than one peel batch is peeled off entirely (k=2)") {
+    // four tail edges need four peels: the fixpoint shows in the second
+    // batch, and the result is that batch's core, not the first's
+    val d = edges(("x", "y"), ("y", "z"), ("z", "x"),
+      ("z", "p1"), ("p1", "p2"), ("p2", "p3"), ("p3", "p4"))
+    assert(run(d, 2) === Map("x" -> 2L, "y" -> 2L, "z" -> 2L))
+  }
+
+  test("maxIter = 1 stops after exactly one batch of three peels") {
+    val d = edges(("x", "y"), ("y", "z"), ("z", "x"), ("z", "p1"),
+      ("p1", "p2"), ("p2", "p3"), ("p3", "p4"), ("p4", "p5"))
+    val got = WebGraph.kCore(d, 2, maxIter = 1).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // p5, p4, p3 peeled; p2 (degree 1) would go in the next batch
+    assert(got === Map("x" -> 2L, "y" -> 2L, "z" -> 3L, "p1" -> 2L, "p2" -> 1L))
+  }
 }

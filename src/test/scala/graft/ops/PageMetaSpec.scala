@@ -156,6 +156,20 @@ class CanonicalMapSpec extends org.scalatest.funsuite.AnyFunSuite
     assert(rows.size == 9)
   }
 
+  test("canonicalMap: a batch with no redirects maps each page by its own canonical") {
+    val s = spark; import s.implicits._
+    val rows = PageMeta.canonicalMap(meta(),
+        Seq.empty[(String, String)].toDF("src", "dst"))
+      .collect().map(r => (r.getString(0),
+        (r.getString(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4))))
+      .toMap
+    assert(rows.size == 9)
+    assert(rows("u:a") == (("u:a", 0L, false, false)))
+    assert(rows("u:c") == (("u:k", 0L, true, false)))
+    assert(rows("u:f") == (("u:z", 0L, true, false)))  // no loop without redirects
+    assert(rows.valuesIterator.forall(v => v._2 == 0L && !v._4))
+  }
+
   test("canonicalClusters: size, declared count, representative rule") {
     val mm = meta()
     val cl = PageMeta.canonicalClusters(

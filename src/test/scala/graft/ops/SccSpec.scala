@@ -134,6 +134,18 @@ class SccSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gated === dist)
   }
 
+  test("distributed path fails loudly when maxIter runs out") {
+    // the tail needs more than one trim barrier, so one barrier cannot
+    // label the graph
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L), (10L, 11L),
+      (11L, 10L), (11L, 20L), (20L, 21L), (21L, 22L), (22L, 23L))
+    val err = intercept[IllegalArgumentException] {
+      WebGraph.stronglyConnected(edges(es: _*), maxIter = 1, hops = 1,
+        driverEdgeGate = 0L).collect()
+    }
+    assert(err.getMessage.contains("did not converge"))
+  }
+
   test("hops batching is result-invariant (hops=1 vs hops=5)") {
     // crafted chain-of-cycles (3 SCCs + trim tails + a feeder): small
     // peel depth keeps the hops=1 arm fast while still driving every

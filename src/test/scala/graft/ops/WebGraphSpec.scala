@@ -372,6 +372,15 @@ class WebGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.valuesIterator.forall(!_._3))
   }
 
+  test("resolveRedirects: an empty redirect table resolves to no rows") {
+    val s = spark
+    import s.implicits._
+    val r = Seq.empty[(String, String)].toDF("src", "dst")
+    val out = WebGraph.resolveRedirects(r)
+    assert(out.columns.toSeq == Seq("src", "final_dst", "hops", "is_cycle"))
+    assert(out.collect().isEmpty)
+  }
+
   // ---------------- anchor-text profile ----------------------------
 
   test("anchorTextProfile: counts, distinct hosts, capped sorted anchors") {
